@@ -16,8 +16,11 @@ in the DuckDB oracle and stable across partitionings.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..functions.portable import fround
 
@@ -417,25 +420,165 @@ def simhash_neardup_pairs_wide(documents: DataFrame, max_hamming: int = 2,
             .select("id1", "id2", "hamming"))
 
 
+def _cc_edges(pairs: DataFrame) -> tuple[DataFrame, int, bool]:
+    """The distinct non-loop ``(u, v)`` edges of ``pairs``, checkpointed,
+    their count, and whether they fit on the driver.
+
+    Null endpoints and self-loops drop out: neither CC operator can pass a
+    label through them. The edges fit when Spark's own size estimate
+    (rows × row width) is within ``spark.sql.autoBroadcastJoinThreshold``,
+    the bound under which Spark ships a table whole to every executor; a
+    threshold ≤ 0 disables the local path. One job: the count is the
+    action that materializes the NON-eager checkpoint.
+    """
+    edges = (pairs.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
+             .filter(F.col("u") != F.col("v"))
+             .distinct()
+             .localCheckpoint(eager=False))
+    n = edges.count()
+    bound = (edges.sparkSession._jsparkSession.sessionState().conf()
+             .autoBroadcastJoinThreshold())
+    width = 8 + edges._jdf.schema().defaultSize()   # Spark's row estimate
+    return edges, n, 0 < bound and n * width <= bound
+
+
+# The local path below collects the edges with ``toPandas()`` and computes
+# labels in NumPy on the driver: a handful of jobs instead of several per
+# round. Measured rejection: running the same kernel in ONE mapInPandas
+# task instead was slower on the dedup_graph benchmark (cold operation
+# CPU 53.7-69.8 s vs 52.5-58.8 s on the driver, 4-CPU host): the task
+# has to start a Python worker, which costs more than the collect.
+
+def _factorize(edges: DataFrame):
+    """Collect ``edges`` and factorize the ids: ``(ids, u, v)`` with
+    ``ids`` sorted ascending (so the smallest index is the smallest id)
+    and ``u``/``v`` the endpoints' positions in ``ids``."""
+    pdf = edges.toPandas()
+    ids, inv = np.unique(np.concatenate([pdf["u"].to_numpy(),
+                                         pdf["v"].to_numpy()]),
+                         return_inverse=True)
+    return ids, inv[:len(pdf)], inv[len(pdf):]
+
+
+def _id_frame(edges: DataFrame, **cols) -> DataFrame:
+    """Driver-side id arrays back as a DataFrame, every column typed like
+    the ids of ``edges``."""
+    dtype = _symmetrize(edges).schema["u"].dataType
+    schema = StructType([StructField(c, dtype) for c in cols])
+    return edges.sparkSession.createDataFrame(pd.DataFrame(cols), schema)
+
+
+def _attach_labels(nodes: DataFrame, id_col: str,
+                   labels: DataFrame) -> DataFrame:
+    """``nodes ⟕ labels``; a node without a label is its own cluster."""
+    return (nodes.select(F.col(id_col).alias("id"))
+            .join(labels, "id", "left")
+            .select(F.col("id").alias(id_col),
+                    F.coalesce("label", F.col("id")).alias("cluster_id")))
+
+
+def _not_converged(max_iter: int, n_changed: int) -> RuntimeError:
+    # a silent early stop would return wrong cluster_ids for any chain
+    # deeper than the hop budget — fail loudly instead (ADVICE r1)
+    return RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        f"(= {2 * max_iter} hops; {n_changed} labels still changing); "
+        f"raise max_iter or use a shallower candidate graph")
+
+
+def _min_label_rounds(n: int, u, v, max_iter: int):
+    """Min-label propagation over ``n`` indices, two hops per round like
+    the distributed rounds: each hop every index takes the min of its own
+    and its neighbours' labels. Returns each index's label."""
+    src, dst = np.concatenate([u, v]), np.concatenate([v, u])
+    label = np.arange(n)
+    for _ in range(max_iter):
+        prev = label.copy()
+        for _hop in range(2):
+            np.minimum.at(label, dst, label[src])
+        n_changed = int(np.count_nonzero(label != prev))
+        if n_changed == 0:
+            return label
+    raise _not_converged(max_iter, n_changed)
+
+
+def _star_roots(n: int, u, v):
+    """The root — the smallest index — of every index's component.
+
+    Each pass hooks every root to its smallest neighbouring root, then
+    pointer-jumps to a star forest (every index points at its root); it
+    repeats until no edge joins two roots. A component's smallest index
+    can never hook, so it is the last root standing. Edges inside one tree
+    never join two roots again and drop out. Measured: 15 passes (0.4 s)
+    on a 10^6-node path with shuffled ids, 4 passes on 4·10^6 random
+    edges; plain min-label with shortcutting took ~3,000 passes on a
+    10^4-node shuffled path.
+    """
+    parent = np.arange(n)
+    while u.size:
+        ru, rv = parent[u], parent[v]
+        cross = ru != rv
+        u, v, ru, rv = u[cross], v[cross], ru[cross], rv[cross]
+        np.minimum.at(parent, ru, rv)
+        np.minimum.at(parent, rv, ru)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return parent
+
+
 def connected_components(pairs: DataFrame, nodes: DataFrame,
                          id_col: str = "doc_id", max_iter: int = 25) -> DataFrame:
     """Near-dup clusters: connected components by min-label propagation.
 
     pairs: (id1, id2) candidate duplicate edges; nodes: one column of ids.
     Returns (doc_id, cluster_id) where cluster_id = min id reachable —
-    the canonical document per duplicate cluster.
+    the canonical document per duplicate cluster. Labels travel only
+    through ids present in ``nodes``: a pair whose endpoint is missing
+    relays nothing. Null endpoints and self-loops are inert.
 
-    Iterative DataFrame algorithm (the one class the oracle expresses as a
-    recursive CTE): each round every node takes the min of its own label
-    and its neighbors' labels; stop when a round changes nothing. Rounds =
-    graph diameter (near-dup graphs are shallow); each round is one
-    shuffle keyed by node. ``localCheckpoint`` cuts the growing lineage so
-    round N doesn't re-plan rounds 1..N-1.
+    Each round runs TWO propagation hops: every node takes the min of its
+    own label and its neighbors' labels, twice. It stops when a round
+    changes nothing, and raises ``RuntimeError`` after ``max_iter``
+    rounds, i.e. ``max_iter`` rounds = 2·``max_iter`` hops (a path of
+    diameter d needs ⌈d/2⌉ rounds).
+
+    Two paths, chosen by input size:
+
+    - **Local** — when the distinct edge table fits
+      ``spark.sql.autoBroadcastJoinThreshold`` (rows × row width; ≤ 0 turns
+      it off): the edges are collected, the endpoints present in ``nodes``
+      found with one semi-join against the broadcast endpoint set, and the
+      same two-hop rounds run in NumPy on the driver, under the same
+      ``max_iter`` and error. ``nodes`` is never collected; the labels
+      join back to it as a broadcast.
+    - **Distributed** — above the bound, each round is one shuffle keyed by
+      node; ``localCheckpoint`` cuts the growing lineage so round N doesn't
+      re-plan rounds 1..N-1.
     """
-    und = (
-        pairs.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
-        .unionByName(pairs.select(F.col("id2").alias("a"), F.col("id1").alias("b")))
-    )
+    edges, _, local = _cc_edges(pairs)
+    if local:
+        ids, u, v = _factorize(edges)
+        # the distributed rounds join labels on ``nodes``, so an edge with
+        # an endpoint outside ``nodes`` relays nothing: drop it here too
+        present = (nodes.select(F.col(id_col).alias("id"))
+                   .join(F.broadcast(_id_frame(edges, id=ids)), "id",
+                         "left_semi")
+                   .toPandas()["id"].to_numpy())
+        keep = np.isin(ids, present)
+        inside = keep[u] & keep[v]
+        label = _min_label_rounds(len(ids), u[inside], v[inside], max_iter)
+        moved = label != np.arange(len(ids))
+        # cluster ids keep the type of ``nodes``, as in the distributed rounds
+        node_type = nodes.schema[id_col].dataType
+        labels = _id_frame(edges, id=ids[moved], label=ids[label[moved]])
+        labels = labels.select(*[F.col(c).cast(node_type).alias(c)
+                                 for c in ("id", "label")])
+        return _attach_labels(nodes, id_col, F.broadcast(labels))
+
+    und = _symmetrize(edges).select(F.col("u").alias("a"), F.col("v").alias("b"))
     labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
     labels = labels.localCheckpoint(eager=True)
 
@@ -458,7 +601,7 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
         )
 
     # TWO propagations per materialized round (r15, VERDICT r14 next #5):
-    # after round t every label is exactly min(id) over the t-hop
+    # after round t every label is exactly min(id) over the 2t-hop
     # neighborhood — a closed form independent of how hops are grouped
     # into jobs — so batching two hops per checkpoint+count halves the
     # per-round job floor (the sf0.1 cost is scheduler floor, not bytes;
@@ -479,12 +622,7 @@ def connected_components(pairs: DataFrame, nodes: DataFrame,
         if n_changed == 0:
             break
     else:
-        # a silent early stop would return wrong cluster_ids for any chain
-        # deeper than max_iter — fail loudly instead (ADVICE r1)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({n_changed} labels still changing); raise max_iter or use a "
-            f"shallower candidate graph")
+        raise _not_converged(max_iter, n_changed)
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
 
 
@@ -530,31 +668,42 @@ def connected_components_star(pairs: DataFrame, nodes: DataFrame,
     """Connected components via large-star/small-star — O(log n) rounds.
 
     Same contract as ``connected_components`` (cluster_id = min reachable
-    id; the two are property-tested equivalent), but each round contracts
-    path lengths multiplicatively instead of by one hop, so a chain of
-    depth d converges in O(log d) rounds rather than d (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14). Prefer this
-    on candidate graphs whose diameter is unknown — transitive MinHash
-    chains over boilerplate-heavy corpora at 100 TB routinely exceed
-    min-label propagation's practical round budget.
+    id; the two are property-tested equivalent), except that a pair whose
+    endpoint is missing from ``nodes`` still connects through that id.
+    Each round contracts path lengths multiplicatively instead of by one
+    hop, so a chain of depth d converges in O(log d) rounds rather than d
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC'14). Prefer this on candidate graphs whose diameter is unknown —
+    transitive MinHash chains over boilerplate-heavy corpora at 100 TB
+    routinely exceed min-label propagation's practical round budget.
 
-    Each round = two grouped aggregations (two shuffles) + a distinct;
-    convergence check is exact but pays for exactness only when it might
-    matter: both edge sets are ``distinct()`` outputs, so set equality ⟺
-    equal counts AND empty symmetric difference. The per-round action is
-    a single ``count()`` (which also materializes the round's NON-eager
-    ``localCheckpoint`` — one pass computes, checkpoints, and counts);
-    the one-job sum-signed symmetric diff runs only on rounds where the
-    count is unchanged (typically just the final round). This halves the
-    per-round job count vs the former eager-checkpoint + ``exceptAll``
-    form — iterative rounds are pure scheduler floor on a cluster, so
-    fewer jobs per round is the lever (VERDICT r5 plan-audit class).
+    Two paths, chosen by input size:
+
+    - **Local** — when the distinct edge table fits
+      ``spark.sql.autoBroadcastJoinThreshold`` (rows × row width; ≤ 0 turns
+      it off): the edges are collected and a star kernel runs in NumPy on
+      the driver (hook each root to its smallest neighbouring root,
+      pointer-jump, repeat). It always converges, so ``max_iter`` does not
+      apply. ``nodes`` is never collected; the labels join back to it as a
+      broadcast.
+    - **Distributed** — above the bound, at most ``max_iter`` rounds. Each
+      round = two grouped aggregations (two shuffles) + a distinct;
+      convergence check is exact but pays for exactness only when it might
+      matter: both edge sets are ``distinct()`` outputs, so set equality ⟺
+      equal counts AND empty symmetric difference. The per-round action is
+      a single ``count()`` (which also materializes the round's NON-eager
+      ``localCheckpoint`` — one pass computes, checkpoints, and counts);
+      the one-job sum-signed symmetric diff runs only on rounds where the
+      count is unchanged (typically just the final round).
     """
-    edges = (pairs.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
-             .filter(F.col("u") != F.col("v"))
-             .distinct()
-             .localCheckpoint(eager=True))
-    n_prev = edges.count()
+    edges, n_prev, local = _cc_edges(pairs)
+    if local:
+        ids, u, v = _factorize(edges)
+        root = _star_roots(len(ids), u, v)
+        moved = root != np.arange(len(ids))
+        labels = _id_frame(edges, id=ids[moved], label=ids[root[moved]])
+        return _attach_labels(nodes, id_col, F.broadcast(labels))
+
     # NOT double-stepped (r15, VERDICT r14 next #5 — measured rejection):
     # batching two large/small-star alternations per materialized round
     # is result-identical (the alternation's potential strictly
@@ -590,11 +739,8 @@ def connected_components_star(pairs: DataFrame, nodes: DataFrame,
             f"connected_components_star did not converge in {max_iter} rounds")
     # converged edge set is a star forest: every non-root points at its
     # component minimum; roots and isolated nodes label themselves
-    roots = edges.groupBy("u").agg(F.min("v").alias("label"))
-    return (nodes.select(F.col(id_col).alias("id"))
-            .join(roots.withColumnRenamed("u", "id"), "id", "left")
-            .select(F.col("id").alias(id_col),
-                    F.coalesce("label", F.col("id")).alias("cluster_id")))
+    roots = edges.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("label"))
+    return _attach_labels(nodes, id_col, roots)
 
 
 def simhash_neardup_pairs(documents: DataFrame, max_hamming: int = 2,
@@ -1354,7 +1500,10 @@ def set_similarity_join(documents: DataFrame, threshold: float = 0.5,
             n_docs = documents.count()
             avg_tok = 0.0
             if n_docs:
-                frac = min(1.0, 4096.0 / n_docs)
+                # ~640 rows expected, so limit(512) is only a cap and the
+                # sample spans the whole corpus; a larger fraction would
+                # let the limit keep just the leading partitions' rows
+                frac = min(1.0, 640.0 / n_docs)
                 sample = (documents.select(F.col(text_col).alias(text_col))
                           .sample(fraction=frac, seed=7).limit(512))
                 avg_tok = (sample

@@ -358,6 +358,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
              .persist())
     ns = nodes.filter("is_seed").count()
     if ns == 0:
+        nodes.unpersist()   # not registered yet: release it here
         raise ValueError(
             "personalized_pagerank: no seed is a node of the graph — "
             "the restart distribution is empty.")

@@ -777,7 +777,6 @@ def incremental_hll(rows: DataFrame, state_path: str, checkpoint_dir: str,
                         run_id=checkpoint_query_id(checkpoint_dir))
 
     _pin_stream_io(rows.sparkSession)
-    _pin_stream_io(rows.sparkSession)
     return (
         rows.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
@@ -823,6 +822,7 @@ def incremental_cms(rows: DataFrame, state_path: str, checkpoint_dir: str,
         merge_cms_batch(b, state_path, value_col, depth, width, epoch_id,
                         run_id=checkpoint_query_id(checkpoint_dir))
 
+    _pin_stream_io(rows.sparkSession)
     return (
         rows.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)

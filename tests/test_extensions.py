@@ -1,6 +1,8 @@
 """Tests for the extension operators: as-of join, SimHash near-dup,
 stratified sampling, rollup/anti-join/percentile entry queries."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,6 +110,24 @@ def test_jaccard_candidate_mode_matches_block_mode(spark):
     assert via_cand[(1, 2)] == via_block[(1, 2)]
 
 
+@contextlib.contextmanager
+def _cc_path(spark, path):
+    """Put connected components on one side of the driver bound: the
+    local path needs the edge table within autoBroadcastJoinThreshold,
+    a threshold of -1 forces the distributed rounds. Restores the
+    session's setting afterwards."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, {"local": str(64 << 20), "distributed": "-1"}[path])
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+CC_PATHS = ("local", "distributed")
+
+
 def test_connected_components(spark):
     from hybrid_recommendation_system_using_vector_db_spark.operators.dedup import connected_components
 
@@ -115,8 +135,11 @@ def test_connected_components(spark):
     pairs = spark.createDataFrame(
         [(2, 3), (1, 2), (3, 4), (10, 11)], "id1 long, id2 long")
     nodes = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 10, 11, 99]], "doc_id long")
-    got = {r.doc_id: r.cluster_id for r in connected_components(pairs, nodes).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99}
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            got = {r.doc_id: r.cluster_id
+                   for r in connected_components(pairs, nodes).collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 99: 99}, path
 
 
 def test_connected_components_two_hop_batching(spark):
@@ -125,7 +148,8 @@ def test_connected_components_two_hop_batching(spark):
     wrong: an ODD-diameter chain (convergence lands mid-round — the
     ORed changed flag must still stop exactly at the fixpoint) and a
     max_iter that is sufficient in double-hops but not in the old
-    single-hop accounting."""
+    single-hop accounting. Both the driver-local and the distributed
+    rounds keep this budget."""
     from hybrid_recommendation_system_using_vector_db_spark.operators.dedup import (
         connected_components)
 
@@ -133,18 +157,20 @@ def test_connected_components_two_hop_batching(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "id1 long, id2 long")
     nodes = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
-    got = {r.doc_id: r.cluster_id
-           for r in connected_components(pairs, nodes, max_iter=6).collect()}
-    assert got == {i: 0 for i in range(8)}
-    # depth beyond the double-hop budget still fails loudly
-    import pytest as _pytest
-
     deep = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id1 long, id2 long")
     deep_nodes = spark.createDataFrame(
         [(i,) for i in range(31)], "doc_id long")
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(deep, deep_nodes, max_iter=3)
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            got = {r.doc_id: r.cluster_id
+                   for r in connected_components(pairs, nodes,
+                                                 max_iter=6).collect()}
+            assert got == {i: 0 for i in range(8)}, path
+            # depth beyond the double-hop budget still fails loudly
+            with pytest.raises(RuntimeError,
+                               match=r"did not converge in 3 rounds \(= 6 hops"):
+                connected_components(deep, deep_nodes, max_iter=3)
 
 
 def test_connected_components_star_equivalence(spark):
@@ -160,25 +186,106 @@ def test_connected_components_star_equivalence(spark):
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
     pairs = spark.createDataFrame(edges, "id1 long, id2 long")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    base = {r.doc_id: r.cluster_id
-            for r in connected_components(pairs, nodes, max_iter=80).collect()}
-    star = {r.doc_id: r.cluster_id
-            for r in connected_components_star(pairs, nodes).collect()}
-    assert star == base
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            base = {r.doc_id: r.cluster_id
+                    for r in connected_components(pairs, nodes,
+                                                  max_iter=80).collect()}
+            star = {r.doc_id: r.cluster_id
+                    for r in connected_components_star(pairs, nodes).collect()}
+        assert star == base, path
 
 
 def test_connected_components_star_deep_chain(spark):
     """A 64-deep chain needs 63 propagation rounds but must converge for
-    the star variant within 10 — the O(log n) claim, asserted."""
+    the star variant within 10 — the O(log n) claim, asserted (the
+    driver-local star kernel takes no round budget at all)."""
     from hybrid_recommendation_system_using_vector_db_spark.operators.dedup import (
         connected_components_star)
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "id1 long, id2 long")
     nodes = spark.createDataFrame([(i,) for i in range(64)], "doc_id long")
-    got = {r.doc_id: r.cluster_id
-           for r in connected_components_star(pairs, nodes, max_iter=10).collect()}
-    assert got == {i: 0 for i in range(64)}
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            got = {r.doc_id: r.cluster_id
+                   for r in connected_components_star(pairs, nodes,
+                                                      max_iter=10).collect()}
+        assert got == {i: 0 for i in range(64)}, path
+
+
+def _union_find_labels(pairs, nodes, through_missing):
+    """Reference CC labels: min reachable id per node, ignoring null
+    endpoints and self-loops. ``through_missing`` lets a pair whose
+    endpoint is not in ``nodes`` connect through that id (star); without
+    it such a pair relays nothing (min-label)."""
+    parent = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    known = set(nodes)
+    for a, b in pairs:
+        if a is None or b is None or a == b:
+            continue
+        if not through_missing and (a not in known or b not in known):
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return [(x, None if x is None else find(x)) for x in nodes]
+
+
+def test_connected_components_edge_inputs(spark):
+    """Both CC operators on odd inputs, on both sides of the driver bound:
+    empty pairs, null ids, self-loops, duplicate pairs, string ids, and a
+    pair whose endpoint is missing from ``nodes`` (min-label relays
+    nothing through it, star connects through it). A 10^4-node shuffled
+    path runs on the local path only: min-label needs 5·10^3 distributed
+    rounds for it."""
+    import random
+
+    from hybrid_recommendation_system_using_vector_db_spark.operators.dedup import (
+        connected_components, connected_components_star)
+
+    ops = ((connected_components, False), (connected_components_star, True))
+    cases = [
+        ([], [1, 2, 3], "long"),
+        ([(1, 2), (2, 1), (1, 2), (3, 3), (None, 4), (4, None), (None, None),
+          (5, 0), (0, 6), (7, 6)], [1, 2, 3, 4, 5, 6, 7, None], "long"),
+        ([("b", "a"), ("c", "b"), ("c", "c"), ("y", "x"), ("d", None),
+          ("e", "0"), ("0", "f")], ["a", "b", "c", "d", "e", "f", "x", "y"],
+         "string"),
+    ]
+    for path in CC_PATHS:
+        with _cc_path(spark, path):
+            for pairs, nodes, t in cases:
+                pdf = spark.createDataFrame(pairs, f"id1 {t}, id2 {t}")
+                ndf = spark.createDataFrame([(x,) for x in nodes], f"doc_id {t}")
+                for op, through in ops:
+                    out = op(pdf, ndf)
+                    assert out.schema.simpleString() == \
+                        f"struct<doc_id:{t},cluster_id:{t}>".replace(
+                            "long", "bigint"), (path, op.__name__)
+                    got = sorted(map(tuple, out.collect()), key=repr)
+                    want = sorted(_union_find_labels(pairs, nodes, through),
+                                  key=repr)
+                    assert got == want, (path, op.__name__, pairs)
+
+    n = 10_000
+    ids = list(range(n))
+    random.Random(7).shuffle(ids)
+    path_pairs = list(zip(ids, ids[1:]))
+    pdf = spark.createDataFrame(path_pairs, "id1 long, id2 long")
+    ndf = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    with _cc_path(spark, "local"):
+        for op, kw in ((connected_components, {"max_iter": n}),
+                       (connected_components_star, {})):
+            got = dict(map(tuple, op(pdf, ndf, **kw).collect()))
+            assert got == {i: 0 for i in range(n)}, op.__name__
 
 
 def test_model_embedder_batching_caching_schema(spark):
@@ -4770,6 +4877,35 @@ def test_personalized_pagerank_mass_concentrates_at_seed(spark):
     with pytest.raises(ValueError, match="no seed"):
         personalized_pagerank(
             edges, spark.createDataFrame([(99,)], "node long"))
+
+
+def test_personalized_pagerank_zero_seeds_releases_cache(spark):
+    """The zero-seed ValueError is raised after PPR persisted its node
+    table; the error path must unpersist it, so repeated failing calls
+    leave the session's cached-RDD count unchanged. Local checkpoints
+    are not counted: Spark's context cleaner drops those once nothing
+    references them."""
+    import pytest
+
+    from hybrid_recommendation_system_using_vector_db_spark.operators.graph import (
+        personalized_pagerank,
+    )
+
+    edges = spark.createDataFrame([(1, 2, 1), (2, 1, 1)],
+                                  "src long, dst long, weight long")
+    seeds = spark.createDataFrame([(99,)], "node long")
+
+    def cached():
+        return sum(not rdd.isCheckpointed() for rdd in
+                   spark.sparkContext._jsc.getPersistentRDDs().values())
+
+    # the first call also releases whatever an earlier PPR call registered
+    with pytest.raises(ValueError, match="no seed"):
+        personalized_pagerank(edges, seeds)
+    before = cached()
+    with pytest.raises(ValueError, match="no seed"):
+        personalized_pagerank(edges, seeds)
+    assert cached() == before
 
 
 def test_ppr_and_pagerank_symmetric_paths_bit_identical(spark):

@@ -844,3 +844,32 @@ def test_incremental_cms_fold_matches_one_shot(spark, tmp_path):
                     epoch_id=1, run_id="r")
     assert sorted(map(tuple,
                       read_edge_state(spark, state).collect())) == want
+
+
+def test_incremental_cms_pins_checkpoint_checksums_off(spark, tmp_path):
+    """incremental_cms starts its stream with Spark 4.1's checkpoint-file
+    checksums off, like every other stream start (the checksum manager
+    leaks IO threads per query)."""
+    from hybrid_recommendation_system_using_vector_db_spark.streaming.events import (
+        incremental_cms,
+    )
+
+    key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    feed = str(tmp_path / "feed")
+    spark.createDataFrame([(i,) for i in range(20)], "v long") \
+        .write.parquet(feed)
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        q = incremental_cms(spark.readStream.schema("v long").parquet(feed),
+                            str(tmp_path / "state"), str(tmp_path / "ckpt"),
+                            "v", depth=2, width=16)
+        try:
+            assert spark.conf.get(key) == "false"
+        finally:
+            q.awaitTermination()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
