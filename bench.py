@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]
+(default: the host's core count), in a session built by ``session.get_spark``.
 
 Prints ONE compact JSON line to stdout:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -26,7 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 # the queries that make up the headline number (reference-parity EP1-EP3
 # pipeline + scale-path extensions); keys match __spark_entry__.queries()
@@ -290,17 +291,9 @@ HEADLINE = [
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from hybrid_recommendation_system_using_vector_db_spark.session import get_spark, release
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("spark-graft-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    spark = get_spark("spark-graft-bench", cpus=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry_mod
@@ -403,10 +396,10 @@ def main() -> None:
     # capacity (understating the steal fraction), and USER_HZ is a kernel
     # build choice, not a constant — take both from the OS.
     try:
-        n_cpu = min(os.cpu_count() or int(CPUS),
+        n_cpu = min(os.cpu_count() or CPUS,
                     len(os.sched_getaffinity(0)))
     except (AttributeError, OSError):
-        n_cpu = os.cpu_count() or int(CPUS)
+        n_cpu = os.cpu_count() or CPUS
     try:
         user_hz = float(os.sysconf("SC_CLK_TCK"))
     except (ValueError, OSError):
@@ -597,7 +590,7 @@ def main() -> None:
     serve_iters: list[float] = []
     n_serve_q = 0
     try:
-        entry_mod._reset_serving_caches()   # drop sweep-phase memos
+        release()                           # drop sweep-phase memos
         spark.catalog.clearCache()          # and any stray cached plans
         try:
             spark.sparkContext._jvm.System.gc()

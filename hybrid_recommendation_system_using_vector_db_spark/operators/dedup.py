@@ -27,12 +27,8 @@ from ..functions.portable import fround
 from .. import ROUND_SCORE
 from ..functions import texttools as TT
 from ..functions.hashing import hex_nibble_value, minhash
+from ..session import memo
 from .similarity import _spread
-
-# session-scoped memo of set_similarity_join's token-count estimates,
-# keyed (applicationId, input plan semanticHash, text_col) — the
-# auto-spill DECISION input, never results (r15, VERDICT r14 next #7)
-_TOKEN_ESTIMATES: dict = {}
 
 
 def exact_dedup(documents: DataFrame, id_col: str = "doc_id",
@@ -1485,18 +1481,14 @@ def set_similarity_join(documents: DataFrame, threshold: float = 0.5,
     if spill_dir is None and checkpoint_tokens:
         # r15 (VERDICT r14 next #7 + ADVICE): the estimate is a pure
         # function of (corpus, text_col), so pay the count + sample ONCE
-        # per session per input — keyed on the plan's semantic hash, the
-        # session-memo convention (applicationId scoping keeps it from
-        # leaking across runs). The sample is RANDOM (seeded), not a
+        # per session per input — a session registry entry keyed on the
+        # plan's semantic hash. It is the auto-spill DECISION input,
+        # never results. The sample is RANDOM (seeded), not a
         # limit() prefix: a corpus whose leading rows are unrepresentative
         # (e.g. written sorted by length) would bias a prefix sample by
         # orders of magnitude; the decision is still decision-only (both
         # strategies are result-identical).
-        sess = documents.sparkSession
-        key = (sess.sparkContext.applicationId,
-               documents.semanticHash(), text_col)
-        est = _TOKEN_ESTIMATES.get(key)
-        if est is None:
+        def estimate():
             n_docs = documents.count()
             avg_tok = 0.0
             if n_docs:
@@ -1509,8 +1501,10 @@ def set_similarity_join(documents: DataFrame, threshold: float = 0.5,
                 avg_tok = (sample
                            .agg(F.avg(F.size(TT.distinct_tokens(
                                F.col(text_col))))).first()[0]) or 0.0
-            est = n_docs * avg_tok
-            _TOKEN_ESTIMATES[key] = est
+            return n_docs * avg_tok
+        est = memo(documents.sparkSession,
+                   ("token_estimate", documents.semanticHash(), text_col),
+                   estimate)
         if est > auto_spill_tokens:
             import atexit
             import shutil

@@ -24,36 +24,24 @@ from pyspark.sql import functions as F
 
 from .. import ROUND_SCORE
 from ..functions.portable import fround
+from ..session import drop, memo
 
 # r15: the iterative drivers PERSIST their static per-round join tables
 # (a localCheckpoint scan reports UnknownPartitioning, so Catalyst
 # re-exchanged them every round — VERDICT r14 wrong #1; an
 # InMemoryTableScan preserves the build partitioning). The returned
 # round chain stays LAZY (the caller's action materializes it — the
-# one-job round discipline), so the call itself cannot unpersist; this
-# registry instead releases the PREVIOUS call's tables when the same
-# operator runs again, bounding a long-lived session to one cached
-# static table set per operator. Results never ride the registry —
-# a superseded call's DataFrame stays correct via lineage recompute.
-_LIVE_CACHES: dict = {}
-
-
-def _release_cached(op: str, spark) -> None:
-    """Unpersist the previous call's static tables. MUST run BEFORE the
-    new call persists its own: unpersist() drops cache entries by
-    logical-plan match, so releasing after would evict the new call's
-    identical-lineage cache right back out (measured: LPA rounds
-    re-derived the edge build 4x per call, 19 -> 26 jobs)."""
-    key = (spark.sparkContext.applicationId, op)
-    for old in _LIVE_CACHES.pop(key, []):
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-
-
-def _register_cached(op: str, spark, dfs) -> None:
-    _LIVE_CACHES[(spark.sparkContext.applicationId, op)] = list(dfs)
+# one-job round discipline), so the call itself cannot unpersist.
+# Instead each operator keeps its static tables in the session artifact
+# registry under ``(op,)``: the next call of the same operator ``drop``s
+# them and ``memo``s its own, so a long-lived session holds one cached
+# static table set per operator, and ``session.release`` frees the last
+# one. The ``drop`` MUST run BEFORE the new persist: unpersist() matches
+# cache entries by logical plan, so dropping after would evict the new
+# call's identical-lineage cache (measured: LPA rounds re-derived the
+# edge build 4x per call, 19 -> 26 jobs). Results never ride the
+# registry — a superseded call's DataFrame stays correct via lineage
+# recompute.
 
 
 def _require_integral(df: DataFrame, col: str, op: str) -> None:
@@ -173,10 +161,9 @@ def pagerank(edges: DataFrame, n_iters: int = 3, damping: float = 0.85,
     # exchange — guide §2.4, the single-job analogue of bucketing the
     # static graph tables by their join keys at 100 TB; MEMORY_AND_DISK
     # spills like a checkpoint would at scale). The round chain stays
-    # lazy for the caller's one materializing action; the
-    # _release_cached/_register_cached registry releases the previous
-    # call's tables so a long-lived session holds at most one cached
-    # static set per operator.
+    # lazy for the caller's one materializing action; the session
+    # registry releases the previous call's tables so a long-lived
+    # session holds at most one cached static set per operator.
     # symmetric=True (an undirected edge list with both directions
     # present, e.g. the co-purchase aggregate): every node then has an
     # out-edge, so the node set IS out_w's key set — one partial-agg
@@ -184,7 +171,7 @@ def pagerank(edges: DataFrame, n_iters: int = 3, damping: float = 0.85,
     # the dangling set is EMPTY by construction, so the per-iteration
     # dangling aggregate is a literal zero (bit-identical result: the
     # general form adds d·(0/N) — an exact IEEE no-op).
-    _release_cached("pagerank", edges.sparkSession)
+    drop(edges.sparkSession, ("pagerank",))
     if symmetric:
         nodes = (out_w.select(F.col("src").alias("node"),
                               F.lit(False).alias("is_dangling"))
@@ -217,7 +204,7 @@ def pagerank(edges: DataFrame, n_iters: int = 3, damping: float = 0.85,
     # scale-correct dial). Same one build job the r14 eager checkpoint
     # cost.
     ew = e.join(out_w, "src").repartition("src").persist()
-    _register_cached("pagerank", edges.sparkSession, [nodes, ew])
+    memo(edges.sparkSession, ("pagerank",), lambda: [nodes, ew])
     ew.count()
     d = damping
     omd = 1.0 - damping
@@ -349,7 +336,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     # hash(node) build partitioning for the per-round contribution join
     # — see pagerank. The seed count below scans every partition, so it
     # doubles as the cache-materializing action.
-    _release_cached("personalized_pagerank", edges.sparkSession)
+    drop(edges.sparkSession, ("personalized_pagerank",))
     nodes = (base
              .join(seeds.select(F.col(seed_col).alias("node")).distinct()
                    .withColumn("is_seed", F.lit(True)), "node", "left")
@@ -369,8 +356,8 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
     # hash(src)-partitioned (AQE-sized — see pagerank), persisted and
     # materialized eagerly so the rounds see the partitioning
     ew = e.join(out_w, "src").repartition("src").persist()
-    _register_cached("personalized_pagerank", edges.sparkSession,
-                     [nodes_cached, ew])
+    memo(edges.sparkSession, ("personalized_pagerank",),
+         lambda: [nodes_cached, ew])
     ew.count()
     d, omd = damping, 1.0 - damping
     ranks = nodes.select("node", F.col("s").alias("rank"),
@@ -868,9 +855,9 @@ def label_propagation(edges: DataFrame, n_rounds: int = 4,
     # MEMORY_AND_DISK default spills like a checkpoint would at scale).
     # Labels are identical either way: partitioning never changes
     # values, and the per-round sums are exact BIGINTs (order-free).
-    _release_cached("label_propagation", edges.sparkSession)
+    drop(edges.sparkSession, ("label_propagation",))
     und = und.repartition("b").persist()
-    _register_cached("label_propagation", edges.sparkSession, [und])
+    memo(edges.sparkSession, ("label_propagation",), lambda: [und])
     und.count()  # materialize once (same one job the eager checkpoint cost)
     labels = und.select(F.col("a").alias("node")).distinct() \
         .withColumn("label", F.col("node"))

@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from hybrid_recommendation_system_using_vector_db_spark import QUERY_MOD
+from hybrid_recommendation_system_using_vector_db_spark import QUERY_MOD, session
 from hybrid_recommendation_system_using_vector_db_spark.datamodel import load_table
 from hybrid_recommendation_system_using_vector_db_spark.embeddings import hashing_embedder
 from hybrid_recommendation_system_using_vector_db_spark.operators import multimodal, similarity
@@ -191,18 +191,25 @@ def test_spread_classifies_by_plan_nodes_not_rendered_text(spark, tmp_path):
         .coalesce(1).write.parquet(p)
 
     # map-only scan with an adversarial alias: fast path, widened
+    def spread_keys():
+        # registry keys are (applicationId, "spread", files, target)
+        return [k[1:] for k in session._registry.entries if k[1] == "spread"]
+
+    def clear_spread():
+        for k in spread_keys():
+            session.drop(spark, k)
+
     df = (spark.read.parquet(p).alias("JoinSortWindowAggregateData")
           .filter(F.col("id") > 1))
-    similarity._SPREAD_CACHE.clear()
+    clear_spread()
     out = similarity._spread(df, min_partitions=8)
-    assert any(isinstance(k, tuple) and any(p in f for f in k[1])
-               for k in similarity._SPREAD_CACHE), \
+    assert any(any(p in f for f in k[1]) for k in spread_keys()), \
         "map-only scan did not take the file-metadata fast path"
     assert out.rdd.getNumPartitions() == 8
 
     # aggregate: not map-only -> physical probe, no file-estimate entry
     agg = spark.read.parquet(p).groupBy("id").count()
-    similarity._SPREAD_CACHE.clear()
+    clear_spread()
     similarity._spread(agg, min_partitions=8)
-    assert not similarity._SPREAD_CACHE, \
+    assert not spread_keys(), \
         "aggregate plan wrongly classified map-only"

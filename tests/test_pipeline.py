@@ -1431,3 +1431,43 @@ def test_staged_family_mark_rejects_vanished_stage(spark, tmp_path):
     assert sorted(r.doc_id for r in
                   spark.read.parquet(f"{out}/fam2_docs").collect()) == [0, 1, 2, 3]
     assert not os.path.exists(fam2.staging(out))
+
+
+def test_release_frees_session_artifacts(spark, sf_dir):
+    """Every build-once artifact lives in the session registry, so one
+    ``release()`` frees them all: the temp dirs the file renders and the
+    dedup artifact were written to are removed, and the cached tables the
+    calls persisted (here: pagerank's static join tables) are unpersisted.
+    Local checkpoints are not counted: Spark's context cleaner drops those
+    once nothing references them."""
+    import glob
+    import os
+    import tempfile
+
+    import __spark_entry__ as m
+    from hybrid_recommendation_system_using_vector_db_spark.session import release
+
+    prefixes = ("orc", "csv", "jsonl", "meta", "dedup")
+
+    def artifact_dirs():
+        return {d for p in prefixes for d in glob.glob(
+            os.path.join(tempfile.gettempdir(), f"spark_graft_{p}_*"))}
+
+    def cached():
+        return sum(not rdd.isCheckpointed() for rdd in
+                   spark.sparkContext._jsc.getPersistentRDDs().values())
+
+    release()   # an empty registry, so every call below builds its artifact
+    dirs_before, cached_before = artifact_dirs(), cached()
+    q = {**m.extra_queries(), **m.queries()}
+    for name in ("orc_roundtrip", "csv_ingest", "jsonl_ingest",
+                 "amazon_meta_ingest", "minhash_jaccard_neardup", "pca_topk",
+                 "pagerank"):
+        q[name](spark, sf_dir).count()
+    created = artifact_dirs() - dirs_before
+    assert len(created) == len(prefixes), sorted(created)
+    assert cached() > cached_before
+
+    release()
+    assert not created & artifact_dirs(), "release() left artifact dirs"
+    assert cached() == cached_before, "release() left cached tables"

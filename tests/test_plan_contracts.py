@@ -13,6 +13,7 @@ from hybrid_recommendation_system_using_vector_db_spark.plans import (
     pushed_filters,
     read_schemas,
 )
+from hybrid_recommendation_system_using_vector_db_spark.session import release
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_dir):
@@ -139,8 +140,8 @@ def test_serve_chain_job_count_bounded(spark):
 
     sf = "/root/testdata/sf0.001"
     # other tests in the shared session may have clearCache()'d the
-    # memoized indexes out from under the memo dicts — reset and rebuild
-    m._reset_serving_caches()
+    # memoized indexes out from under the registry — release and rebuild
+    release()
     m.queries()["hybrid_topk"](spark, sf).count()  # warm: builds indexes
     st = spark.sparkContext.statusTracker()
     j0 = max(st.getJobIdsForGroup() or [0])
@@ -240,7 +241,7 @@ def test_hybrid_serve_amortizes(spark):
         hybrid, similarity as sim)
 
     sf = "/root/testdata/sf0.001"
-    m._reset_serving_caches()
+    release()
     universe = m._served_universe(spark, sf)
     edges = m._served_edges(spark, sf)
     names = m._names(spark, sf)
@@ -629,7 +630,7 @@ def test_whole_surface_scan_budget(spark, sf_dir):
     # the cached plan's own Scan nodes into the formatted output and
     # inflates the count (the lsh multitable test's documented effect).
     # Sweep from a cold cache so the measured shape is the plan's own.
-    m._reset_serving_caches()
+    release()
     spark.catalog.clearCache()
 
     budget = 30
@@ -714,7 +715,7 @@ def test_hybrid_serve_batch_warm_jobs_and_scans_bounded(spark):
     from hybrid_recommendation_system_using_vector_db_spark.plans import formatted_plan
 
     sf = "/root/testdata/sf0.001"
-    m._reset_serving_caches()
+    release()
     m.hybrid_serve_batch(spark, sf).count()   # warm: builds + persists
     st = spark.sparkContext.statusTracker()
     j0 = max(st.getJobIdsForGroup() or [0])
@@ -765,7 +766,7 @@ def test_eval_tables_build_once(spark):
     import __spark_entry__ as m
 
     sf = "/root/testdata/sf0.001"
-    m._reset_serving_caches()
+    release()
     t1 = m._eval_rank_tables(spark, sf)
     t2 = m._eval_rank_tables(spark, sf)
     assert t1[0]["content"] is t2[0]["content"]
